@@ -114,7 +114,9 @@ def pytest_collection_modifyitems(config, items):
         reason="slow profile: set TIMEBOX_FULL_TESTS=1 to run"
     )
     for item in items:
-        nodeid = item.nodeid.split("/")[-1]
+        # "file.py::name[param]": a "/" inside a param id must not cut it
+        path, _, name = item.nodeid.partition("::")
+        nodeid = f"{os.path.basename(path)}::{name}"
         if "slow" in item.keywords or nodeid in SLOW_NODEIDS:
             item.add_marker(skip)
 

@@ -32,23 +32,31 @@ no code is copied, the byte layout is the contract):
   per tag (sorted): the column block — n values of the stored dtype
     (n−1 for mode 'e').
 
-Spark integration: ``read_npb`` scans a directory of .npb files with
-the binaryFile source and decodes per-file inside ``mapInPandas`` —
-each file is one Arrow batch task, so a million-file corpus decodes
-with full cluster parallelism. ``write_npb`` emits one file per time
-bucket via ``applyInPandas`` (each bucket must respect the format's
-2^32-row cap), or a single driver-side file for exact
-single-file parity.
+Spark integration: ``read_npb`` scans .npb files with the binaryFile
+source and decodes them in ``mapInArrow``, each file straight from
+numpy arrays to one Arrow RecordBatch. Building the DataFrame runs no
+Spark job: the schema comes from the first file's header bytes, read
+on the driver. A file-name glob such as ``dir/*.npb`` is listed as the
+directory plus a ``pathGlobFilter``, in one listing. Decode tasks are
+sized by bytes, one per ~96 MiB of .npb files, so a small read is one
+Python task and a million-file corpus still decodes with full cluster
+parallelism. ``write_npb`` emits one file per time bucket via
+``applyInPandas`` (each bucket must respect the format's 2^32-row
+cap), or a single driver-side file for exact single-file parity.
 """
 
 from __future__ import annotations
 
+import glob
 import io
 import os
+import struct
+import urllib.parse
 from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 VERSION = 1
 
@@ -350,6 +358,95 @@ def encode_timebox(
     return buf.getvalue()
 
 
+@dataclass
+class NpbHeader:
+    """What an .npb file states before its dates: column specs, row
+    count and date layout, with the byte offsets of the deltas (delta
+    layout only) and of the first column block."""
+
+    specs: list[TagSpec]
+    num_points: int
+    start_s: int
+    diffs_stored: bool
+    step_s: int  # regular layout
+    delta_width: int  # delta layout, as is unit
+    unit: str
+    deltas_at: int
+    blocks_at: int
+
+
+def parse_header(raw) -> NpbHeader:
+    """Parse the header from any bytes-like ``raw`` that holds at least
+    the header (``read_header`` reads no more than that)."""
+    try:
+        version, opts, num_tags, num_points, id_width = struct.unpack_from("<BHBIB", raw)
+        if version != VERSION:
+            raise NpbFormatError(f"unsupported npb version {version}")
+        mv, pos, specs = memoryview(raw), 9, []
+        for _ in range(num_tags):
+            ident = mv[pos : pos + id_width]
+            if opts & OPT_TAG_NAMES_ARE_STRINGS:
+                ident = str(np.frombuffer(ident, dtype=f"<U{id_width // 4}")[0])
+            else:
+                ident = int.from_bytes(ident, "little")
+            pos += id_width
+            tag_opts, bpv, tchar, _extra = struct.unpack_from("<HBBI", raw, pos)
+            spec = TagSpec(identifier=ident, bytes_per_value=bpv, type_char=chr(tchar))
+            untyped = bytes(mv[pos + 8 : pos + TAG_DEF_TAIL_BYTES])
+            _parse_untyped_bytes(
+                spec, untyped, bool(tag_opts & TAG_OPT_COMPRESSION), bool(tag_opts & TAG_OPT_ROUNDED)
+            )
+            specs.append(spec)
+            pos += TAG_DEF_TAIL_BYTES
+        diffs_stored = bool(opts & OPT_DATE_DIFFS_STORED)
+        if diffs_stored:
+            start_s, delta_width, code = struct.unpack_from("<qBH", raw, pos)
+            step_s, unit, pos = 0, ORDER_UNIT[code], pos + 11
+        else:
+            start_s, step_s = struct.unpack_from("<qI", raw, pos)
+            delta_width, unit, pos = 0, "s", pos + 12
+    except struct.error as exc:
+        raise NpbFormatError(f"truncated npb header: {exc}") from None
+    blocks_at = pos + delta_width * max(num_points - 1, 0)
+    return NpbHeader(specs, num_points, start_s, diffs_stored, step_s, delta_width, unit, pos, blocks_at)
+
+
+def read_header(path: str) -> NpbHeader:
+    """Parse a file's header, reading only the header's bytes."""
+    with open(path, "rb") as fh:
+        head = fh.read(9)
+        if len(head) == 9:  # u8 num_tags at 3, u8 id_width at 8
+            head += fh.read(head[3] * (head[8] + TAG_DEF_TAIL_BYTES) + 12)
+    return parse_header(head)
+
+
+def decode_dates(raw, h: NpbHeader) -> np.ndarray:
+    """The file's timestamps (datetime64[ns]) from header and deltas."""
+    start = np.datetime64(h.start_s, "s").astype("datetime64[ns]")
+    if not h.diffs_stored:
+        return start + np.arange(h.num_points) * np.timedelta64(h.step_s, "s")
+    deltas = np.frombuffer(raw, f"<u{h.delta_width}", max(h.num_points - 1, 0), h.deltas_at)
+    return np.concatenate(([start], start + np.cumsum(deltas.astype(f"timedelta64[{h.unit}]"))))
+
+
+def decode_columns(raw, h: NpbHeader, columns=None) -> dict:
+    """{identifier: values} of the columns in ``columns`` (identifiers or
+    their ``str``; all by default). Other blocks are skipped by size."""
+    wanted = None if columns is None else set(columns)
+    out, at = {}, h.blocks_at
+    for s in h.specs:
+        n = h.num_points
+        if s.compress:
+            dt = np.dtype(f"{s.stored_char}{s.stored_width}")
+            n = max(n - 1, 0) if s.compress == "e" else n
+        else:
+            dt = np.dtype("i8") if s.decimals is not None else s.dtype
+        if wanted is None or s.identifier in wanted or str(s.identifier) in wanted:
+            out[s.identifier] = _decode_column(np.frombuffer(raw, dt, n, at), s, h.num_points)
+        at += dt.itemsize * n
+    return out
+
+
 def decode_timebox(raw: bytes, columns: list | None = None) -> pd.DataFrame:
     """.npb bytes -> pandas frame with a 'ts' datetime64 index.
 
@@ -359,88 +456,63 @@ def decode_timebox(raw: bytes, columns: list | None = None) -> pd.DataFrame:
     (their byte extent is computable from the header), so a 2-of-80
     column scan reads ~2/80ths of the data section.
     """
-    mv = memoryview(raw)
-    pos = 0
-
-    def take(n):
-        nonlocal pos
-        out = mv[pos : pos + n]
-        pos += n
-        return out
-
-    version = take(1)[0]
-    if version != VERSION:
-        raise NpbFormatError(f"unsupported npb version {version}")
-    opts = int(np.frombuffer(take(2), "<u2")[0])
-    names_are_strings = bool(opts & OPT_TAG_NAMES_ARE_STRINGS)
-    diffs_stored = bool(opts & OPT_DATE_DIFFS_STORED)
-    num_tags = take(1)[0]
-    num_points = int(np.frombuffer(take(4), "<u4")[0])
-    id_width = take(1)[0]
-
-    specs: list[TagSpec] = []
-    for _ in range(num_tags):
-        if names_are_strings:
-            ident = str(np.frombuffer(take(id_width), dtype=f"<U{id_width // 4}")[0])
-        else:
-            ident = int(np.frombuffer(take(id_width), dtype=f"<u{id_width}")[0])
-        tag_opts = int(np.frombuffer(take(2), "<u2")[0])
-        bpv = take(1)[0]
-        tchar = chr(take(1)[0])
-        _extra = int(np.frombuffer(take(4), "<u4")[0])
-        spec = TagSpec(identifier=ident, bytes_per_value=bpv, type_char=tchar)
-        _parse_untyped_bytes(
-            spec,
-            bytes(take(32)),
-            compressed=bool(tag_opts & TAG_OPT_COMPRESSION),
-            rounded=bool(tag_opts & TAG_OPT_ROUNDED),
-        )
-        specs.append(spec)
-
-    start_s = int(np.frombuffer(take(8), "<i8")[0])
-    start = np.datetime64(start_s, "s")
-    if diffs_stored:
-        delta_width = take(1)[0]
-        unit = ORDER_UNIT[int(np.frombuffer(take(2), "<u2")[0])]
-        deltas = np.frombuffer(
-            take(delta_width * max(num_points - 1, 0)), dtype=f"<u{delta_width}"
-        )
-        tds = deltas.astype(f"timedelta64[{unit}]")
-        dates = np.concatenate(
-            ([start.astype("datetime64[ns]")], start.astype("datetime64[ns]") + np.cumsum(tds))
-        )
-    else:
-        step_s = int(np.frombuffer(take(4), "<u4")[0])
-        dates = start.astype("datetime64[ns]") + np.arange(num_points) * np.timedelta64(step_s, "s")
-
-    wanted = None if columns is None else set(columns)
-    cols = {}
-    for s in specs:
-        n_read = num_points
-        if s.compress:
-            read_dtype = np.dtype(f"{s.stored_char}{s.stored_width}")
-            if s.compress == "e":
-                n_read = max(num_points - 1, 0)
-        elif s.decimals is not None:
-            read_dtype = np.dtype("i8")
-        else:
-            read_dtype = s.dtype
-        nbytes = read_dtype.itemsize * n_read
-        if wanted is not None and s.identifier not in wanted and str(s.identifier) not in wanted:
-            pos += nbytes  # skip the block without decoding
-            continue
-        block = np.frombuffer(take(nbytes), dtype=read_dtype)
-        cols[s.identifier] = _decode_column(block, s, num_points)
-
-    out = pd.DataFrame(cols, index=pd.DatetimeIndex(dates, name="ts"))
-    return out
+    h = parse_header(raw)
+    index = pd.DatetimeIndex(decode_dates(raw, h), name="ts")
+    return pd.DataFrame(decode_columns(raw, h, columns), index=index)
 
 
 def scan_time_range(raw: bytes) -> tuple:
     """(start, end) datetimes of a file from header + deltas only (no
     column blocks touched) — used for file-level time pruning."""
-    pdf = decode_timebox(raw, columns=[])
-    return (pdf.index.min(), pdf.index.max()) if len(pdf) else (None, None)
+    h = parse_header(raw)
+    dates = decode_dates(raw, h)
+    return (pd.Timestamp(dates.min()), pd.Timestamp(dates.max())) if h.num_points else (None, None)
+
+
+# ------------------------------------------------------------------ Arrow
+
+_TS = pa.timestamp("us", tz="UTC")
+# dtypes Spark has no type for, widened to the next one it has
+_WIDEN = {"uint8": "int16", "uint16": "int32", "uint32": "int64", "float16": "float32"}
+
+
+def _to_arrow(values: np.ndarray) -> pa.Array:
+    """Decoded values as the Arrow array Spark reads; uint64 becomes an
+    exact decimal(20,0)."""
+    if values.dtype == np.uint64:
+        return pa.array(values).cast(pa.decimal128(20, 0))
+    return pa.array(values.astype(_WIDEN.get(values.dtype.name, values.dtype), copy=False))
+
+
+def arrow_schema(h: NpbHeader, columns=None) -> pa.Schema:
+    """Schema of a Spark read of files with header ``h``: ``ts``, then
+    all columns or those in ``columns``, in file order. The DataFrame's
+    schema is its ``from_arrow_schema``."""
+    names = [str(s.identifier) for s in h.specs]
+    wanted = set(names) if columns is None else set(columns) - {"ts"}
+    if missing := wanted - set(names):
+        raise NpbFormatError(f"unknown npb columns: {sorted(missing)}")
+    fields = [(n, _to_arrow(np.empty(0, s.dtype)).type) for n, s in zip(names, h.specs) if n in wanted]
+    return pa.schema([pa.field("ts", _TS, nullable=False), *fields])
+
+
+def decode_batch(raw, schema: pa.Schema, bounds: tuple | None = None) -> pa.RecordBatch | None:
+    """One .npb file as a RecordBatch of ``schema`` (``arrow_schema``).
+
+    ``bounds``: inclusive (lo, hi) in ns since the epoch, UTC. Only rows
+    inside are kept; a file wholly outside decodes no column block and
+    gives None."""
+    h = parse_header(raw)
+    ns = decode_dates(raw, h).view("i8")
+    rows = slice(None)
+    if bounds is not None:
+        if not h.num_points or ns.min() > bounds[1] or ns.max() < bounds[0]:
+            return None
+        rows = (ns >= bounds[0]) & (ns <= bounds[1])
+    cols = {str(k): v for k, v in decode_columns(raw, h, schema.names[1:]).items()}
+    arrays = [pa.array(ns[rows], pa.timestamp("ns", "UTC")).cast(_TS, safe=False)]
+    arrays += [_to_arrow(cols[f.name][rows]).cast(f.type) for f in list(schema)[1:]]
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
 # ------------------------------------------------------------------ files
@@ -463,76 +535,65 @@ def read_npb_file(path: str) -> pd.DataFrame:
 # ------------------------------------------------------------------ Spark
 
 
+def _binary_scan(spark, path: str):
+    """binaryFile DataFrame over ``path``. A file-name glob in a local
+    directory with no subdirectories (``dir/*.npb``) becomes the
+    directory plus ``pathGlobFilter``: the same files in one listing,
+    where Spark would expand the glob to one root path per file and list
+    those in a Spark job (above parallelPartitionDiscovery.threshold)."""
+    reader = spark.read.format("binaryFile")
+    parent, pattern = os.path.split(path)
+    if glob.has_magic(pattern) and not glob.has_magic(parent) and os.path.isdir(parent):
+        with os.scandir(parent) as entries:
+            if not any(e.is_dir() for e in entries):
+                return reader.option("pathGlobFilter", pattern).load(parent)
+    return reader.load(path)
+
+
 def read_npb(spark, path_glob: str, columns: list[str] | None = None,
              time_range: tuple | None = None):
-    """Distributed scan of .npb files: binaryFile source + per-file
-    decode in mapInPandas. Column schema is read from the FIRST file's
-    header (driver-side, header bytes only).
+    """Distributed scan of .npb files: binaryFile scan + per-file decode
+    to Arrow in ``mapInArrow``. Building it runs no Spark job: files come
+    from the scan's driver-side listing, the schema from the first
+    file's header bytes. One Python task per ~96 MiB of files, since
+    each task's fixed start-up cost dominates small reads.
 
     ``columns``: project only these tags (block-skipping decode).
-    ``time_range``: (start, end) — files whose [start, end] span
-    doesn't intersect are skipped after a header+deltas-only probe,
-    and rows are filtered exactly; together these close the
-    reference's partial-read TODO (timebox.py:105) at cluster scale.
+    ``time_range``: inclusive (start, end), naive values taken as UTC;
+    a file whose span misses it decodes only header and deltas, and rows
+    are filtered exactly — together these close the reference's
+    partial-read TODO (timebox.py:105) at cluster scale.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     from timebox_spark.session import ship_package
+    from timebox_spark.table import TimeBoxTable
 
     ship_package(spark)
-    bin_df = spark.read.format("binaryFile").load(path_glob)
-    first = bin_df.select("path").orderBy("path").limit(1).collect()
-    if not first:
+    bin_df = _binary_scan(spark, path_glob)
+    files = bin_df.inputFiles()
+    if not files:
         raise NpbFormatError(f"no npb files at {path_glob}")
-    sample = read_npb_file(first[0]["path"].replace("file:", ""))
-
-    fields = [T.StructField("ts", T.TimestampType(), False)]
-    np_to_spark = {
-        "int8": T.ByteType(), "int16": T.ShortType(), "int32": T.IntegerType(),
-        "int64": T.LongType(), "uint8": T.ShortType(), "uint16": T.IntegerType(),
-        "uint32": T.LongType(), "uint64": T.DecimalType(20, 0),
-        "float16": T.FloatType(), "float32": T.FloatType(), "float64": T.DoubleType(),
-    }
-    keep = [str(c) for c in sample.columns]
-    if columns is not None:
-        missing = set(columns) - set(keep)
-        if missing:
-            raise NpbFormatError(f"unknown npb columns: {sorted(missing)}")
-        keep = [c for c in keep if c in set(columns)]
-    for c in keep:
-        fields.append(T.StructField(c, np_to_spark[str(sample[c].dtype)], True))
-    schema = T.StructType(fields)
-    colnames = keep
-    tr = time_range
+    # through the local filesystem: the shared-path assumption of write_npb
+    first = urllib.parse.unquote(urllib.parse.urlparse(min(files)).path)
+    schema = arrow_schema(read_header(first), columns)
+    bounds = None if time_range is None else tuple(pd.Timestamp(t).value for t in time_range)
+    # total file size from the listing the scan already holds
+    total = int(bin_df._jdf.queryExecution().analyzed().stats().sizeInBytes())
+    tasks = max(1, -(-total // TimeBoxTable._TARGET_BUCKET_BYTES))
 
     def decode(batches):
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                raw = bytes(row["content"])
-                if tr is not None:
-                    lo, hi = scan_time_range(raw)
-                    if lo is None or hi < pd.Timestamp(tr[0]) or lo > pd.Timestamp(tr[1]):
-                        continue  # file-level prune: header+deltas only
-                frame = decode_timebox(raw, columns=colnames)
-                frame.columns = [str(c) for c in frame.columns]
-                out = frame.reset_index().rename(columns={"index": "ts"})
-                if tr is not None:
-                    out = out[(out["ts"] >= pd.Timestamp(tr[0])) & (out["ts"] <= pd.Timestamp(tr[1]))]
-                for c in colnames:
-                    if str(out[c].dtype) == "uint64":
-                        # lossless uint64 → DecimalType(20,0) via
-                        # python Decimal objects (Arrow decimal128)
-                        from decimal import Decimal
+        for batch in batches:
+            for raw in batch.column(0):
+                out = decode_batch(raw.as_buffer(), schema, bounds)
+                if out is not None:
+                    yield out
 
-                        out[c] = out[c].map(lambda v: Decimal(int(v)))
-                    elif str(out[c].dtype).startswith("uint"):
-                        out[c] = out[c].astype(f"int{min(64, 16 * out[c].dtype.itemsize)}")
-                    elif str(out[c].dtype) == "float16":
-                        out[c] = out[c].astype("float32")
-                yield out[["ts"] + colnames]
-
-    return bin_df.select("content").mapInPandas(decode, schema=schema)
+    return (
+        bin_df.select("content")
+        .coalesce(tasks)
+        .mapInArrow(decode, from_arrow_schema(schema))
+    )
 
 
 def write_npb(df, path: str, bucket: str | None = "1 day", **kw) -> None:

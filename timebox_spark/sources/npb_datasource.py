@@ -9,9 +9,10 @@ Registers the format so users can write idiomatic Spark:
           .option("columns", "ts,value").load(...))   # pruned decode
 
 One input partition per file → full cluster parallelism across a
-million-file corpus; per-partition decode reuses the
-block-skipping codec (timebox_spark.sources.npb). Arrow batches are
-emitted directly, so rows never pass through Python one at a time.
+million-file corpus. Schema and decode are ``read_npb``'s: the first
+file's header gives the schema (uint64 as exact decimal(20,0)), and each
+partition is one file decoded straight to an Arrow RecordBatch by the
+block-skipping codec (timebox_spark.sources.npb).
 """
 
 from __future__ import annotations
@@ -25,21 +26,6 @@ from pyspark.sql.datasource import (
     InputPartition,
     WriterCommitMessage,
 )
-from pyspark.sql import types as T
-
-_NP_TO_SPARK = {
-    "int8": T.ByteType(),
-    "int16": T.ShortType(),
-    "int32": T.IntegerType(),
-    "int64": T.LongType(),
-    "uint8": T.ShortType(),
-    "uint16": T.IntegerType(),
-    "uint32": T.LongType(),
-    "uint64": T.DoubleType(),  # DataSource API path keeps it simple
-    "float16": T.FloatType(),
-    "float32": T.FloatType(),
-    "float64": T.DoubleType(),
-}
 
 
 def _list_files(path: str) -> list[str]:
@@ -59,28 +45,23 @@ class NpbDataSource(DataSource):
         return "npb"
 
     def schema(self):
-        from timebox_spark.sources.npb import read_npb_file
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        from timebox_spark.sources.npb import arrow_schema, read_header
 
         files = _list_files(self.options["path"])
         if not files:
             raise FileNotFoundError(f"no .npb files at {self.options['path']}")
-        sample = read_npb_file(files[0])
-        wanted = self._columns()
-        fields = [T.StructField("ts", T.TimestampType(), False)]
-        for c in sample.columns:
-            if wanted is not None and str(c) not in wanted:
-                continue
-            fields.append(
-                T.StructField(str(c), _NP_TO_SPARK[str(sample[c].dtype)], True)
-            )
-        return T.StructType(fields)
+        return from_arrow_schema(arrow_schema(read_header(files[0]), self._columns()))
 
     def _columns(self):
         cols = self.options.get("columns")
         return None if not cols else [c.strip() for c in cols.split(",")]
 
     def reader(self, schema):
-        return NpbReader(self.options["path"], [f.name for f in schema.fields if f.name != "ts"])
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return NpbReader(self.options["path"], to_arrow_schema(schema))
 
     def writer(self, schema, overwrite: bool):
         if overwrite:  # driver-side: clear prior files before tasks run
@@ -95,35 +76,18 @@ class NpbDataSource(DataSource):
 
 
 class NpbReader(DataSourceReader):
-    def __init__(self, path: str, columns: list[str]):
+    def __init__(self, path: str, arrow_schema):
         self.path = path
-        self.columns = columns
+        self.arrow_schema = arrow_schema
 
     def partitions(self):
         return [InputPartition(f) for f in _list_files(self.path)]
 
     def read(self, partition):
-        import pyarrow as pa
-
-        from timebox_spark.sources.npb import decode_timebox
+        from timebox_spark.sources.npb import decode_batch
 
         with open(partition.value, "rb") as fh:
-            frame = decode_timebox(fh.read(), columns=self.columns)
-        frame.columns = [str(c) for c in frame.columns]
-        out = frame.reset_index().rename(columns={"index": "ts"})
-        for c in self.columns:
-            dt = str(out[c].dtype)
-            if dt.startswith("uint") and dt != "uint64":
-                out[c] = out[c].astype(f"int{min(64, 16 * out[c].dtype.itemsize)}")
-            elif dt == "uint64":
-                out[c] = out[c].astype("float64")
-            elif dt == "float16":
-                out[c] = out[c].astype("float32")
-        out["ts"] = out["ts"].astype("datetime64[us]")  # Spark Arrow path rejects ns
-        table = pa.Table.from_pandas(
-            out[["ts"] + self.columns], preserve_index=False
-        )
-        yield from table.to_batches()
+            yield decode_batch(fh.read(), self.arrow_schema)
 
 
 @dataclass
