@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 import sys
+import time
+import uuid
 
 import pytest
 
@@ -65,7 +67,6 @@ SLOW_NODEIDS = {
     "test_streaming.py::test_compact_corpus_scratch_path_distributed_drop",
     "test_streaming.py::test_curate_and_ingest_stream_forwards_gate_and_keep",
     "test_graphs.py::test_pagerank_residuals_and_early_exit",
-    "test_sketches.py::test_cms_stats_mode_fused_scan",
     "test_streaming.py::test_compact_corpus_near_dup_drops_planted_neighbors",
     "test_streaming.py::test_zscore_anomalies_state_accumulates_across_batches",
     "test_streaming.py::test_curate_and_ingest_stream_sink_releases_checkpoints",
@@ -90,11 +91,9 @@ SLOW_NODEIDS = {
     "test_graphs.py::test_pagerank_weighted_matches_duckdb_and_semantics",
     "test_streaming.py::test_estimate_verify_warns_on_high_variance_at_call_site",
     "test_streaming.py::test_near_dup_hits_stream_bucket_cap_and_null_text",
-    "test_sketches.py::test_gated_dedup_binary_tree_matches_string_tree",
     "test_text.py::test_cap_per_group_cms_enforces_corpus_horizon_budget",
     "test_streaming.py::test_compact_corpus_cluster_keep_one_vs_chain",
     "test_oracle_queries.py::test_query_matches_oracle[q30_multimodal_suite]",
-    "test_sketches.py::test_cms_merge_equals_whole_and_mixed_geometry_raises",
     "test_plans.py::test_warc_ranged_reads_over_http",
 }
 
@@ -119,6 +118,31 @@ def pytest_collection_modifyitems(config, items):
         nodeid = f"{os.path.basename(path)}::{name}"
         if "slow" in item.keywords or nodeid in SLOW_NODEIDS:
             item.add_marker(skip)
+
+
+def in_job_group(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, jobs, tasks)
+    that ``statusTracker`` recorded for the group."""
+    sc = spark.sparkContext
+    group = f"t-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        # the tracker learns of jobs through the listener bus; once a
+        # later marker job is visible, every earlier job is too
+        sc.setJobGroup(group + "-marker", "marker")
+        sc.parallelize([1], 1).count()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    deadline = time.time() + 30
+    while not st.getJobIdsForGroup(group + "-marker") and time.time() < deadline:
+        time.sleep(0.05)
+    jobs = st.getJobIdsForGroup(group)
+    tasks = sum(
+        st.getStageInfo(s).numTasks for j in jobs for s in st.getJobInfo(j).stageIds
+    )
+    return out, len(jobs), tasks
 
 
 @pytest.fixture(scope="session")

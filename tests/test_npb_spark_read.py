@@ -5,40 +5,14 @@ Spark jobs, glob listing, and dtypes and time pruning through both
 from __future__ import annotations
 
 import os
-import time
-import uuid
 from decimal import Decimal
 
 import numpy as np
 import pandas as pd
 import pytest
 
+from tests.conftest import in_job_group
 from timebox_spark.sources import npb
-
-
-def _in_group(spark, fn):
-    """Run ``fn`` under a fresh job group; return (result, jobs, tasks)
-    that ``statusTracker`` recorded for the group."""
-    sc = spark.sparkContext
-    group = f"npb-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        # the tracker learns of jobs through the listener bus; once a
-        # later marker job is visible, every earlier job is too
-        sc.setJobGroup(group + "-marker", "marker")
-        sc.parallelize([1], 1).count()
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    st = sc.statusTracker()
-    deadline = time.time() + 30
-    while not st.getJobIdsForGroup(group + "-marker") and time.time() < deadline:
-        time.sleep(0.05)
-    jobs = st.getJobIdsForGroup(group)
-    tasks = sum(
-        st.getStageInfo(s).numTasks for j in jobs for s in st.getJobInfo(j).stageIds
-    )
-    return out, len(jobs), tasks
 
 
 def _write_days(d, n_files, rows=24):
@@ -54,15 +28,15 @@ def test_read_npb_builds_without_jobs_and_lists_globs_once(spark, tmp_path):
     _write_days(d, 40)  # above parallelPartitionDiscovery.threshold (32)
     glob = f"{d}/*.npb"
 
-    by_dir, jobs, _ = _in_group(spark, lambda: npb.read_npb(spark, d))
+    by_dir, jobs, _ = in_job_group(spark, lambda: npb.read_npb(spark, d))
     assert jobs == 0
-    by_glob, jobs, _ = _in_group(spark, lambda: npb.read_npb(spark, glob))
+    by_glob, jobs, _ = in_job_group(spark, lambda: npb.read_npb(spark, glob))
     assert jobs == 0
-    _, jobs, _ = _in_group(spark, lambda: npb.read_npb(spark, glob, ["v"], ("2021-03-02", "2021-03-05")))
+    _, jobs, _ = in_job_group(spark, lambda: npb.read_npb(spark, glob, ["v"], ("2021-03-02", "2021-03-05")))
     assert jobs == 0
 
-    n_dir, dir_jobs, dir_tasks = _in_group(spark, by_dir.count)
-    n_glob, glob_jobs, glob_tasks = _in_group(spark, by_glob.count)
+    n_dir, dir_jobs, dir_tasks = in_job_group(spark, by_dir.count)
+    n_glob, glob_jobs, glob_tasks = in_job_group(spark, by_glob.count)
     assert n_dir == n_glob == 40 * 24
     assert (glob_jobs, glob_tasks) == (dir_jobs, dir_tasks)
     assert sorted(by_dir.collect()) == sorted(by_glob.collect())

@@ -211,16 +211,17 @@ def test_bloom_no_false_negatives_and_merge(spark):
     # probing with the WRONG (m, k) has no no-false-negative guarantee
     # — a dup would bypass exact dedup as 'definitely new' — so the
     # sketch carries its parameters as sentinel rows and a mismatched
-    # probe/merge RAISES instead of silently corrupting results
-    import pytest
+    # probe/merge RAISES (at its first action) instead of silently
+    # corrupting results
+    from pyspark.errors import PySparkException
 
-    with pytest.raises(ValueError, match="m_bits"):
-        SK.bloom_probe(vals, "id", "v", bloom, m * 2, k)
-    with pytest.raises(ValueError, match="m_bits"):
-        SK.bloom_probe(vals, "id", "v", bloom, m, k + 1)
+    with pytest.raises(PySparkException, match="m_bits"):
+        SK.bloom_probe(vals, "id", "v", bloom, m * 2, k).collect()
+    with pytest.raises(PySparkException, match="m_bits"):
+        SK.bloom_probe(vals, "id", "v", bloom, m, k + 1).collect()
     other_geom = SK.bloom_build(ins.select("v"), "v", m * 2, k)
-    with pytest.raises(ValueError, match="geometries"):
-        SK.bloom_merge(bloom.unionByName(other_geom))
+    with pytest.raises(PySparkException, match="geometries"):
+        SK.bloom_merge(bloom.unionByName(other_geom)).collect()
 
     # determinism across runs
     again = {
@@ -402,7 +403,7 @@ def test_bloom_probe_conflicting_sentinels_raise(spark):
     """A raw union of different-geometry sketches carries conflicting
     sentinel rows — the probe must raise, not pick one (the old 2-row
     collect kept whichever row came last)."""
-    import pytest
+    from pyspark.errors import PySparkException
 
     from timebox_spark.operators import sketches as SK
 
@@ -410,8 +411,8 @@ def test_bloom_probe_conflicting_sentinels_raise(spark):
     vals = spark.range(0, 50).selectExpr("id", "md5(CAST(id AS STRING)) AS v")
     b1 = SK.bloom_build(vals.select("v"), "v", m, k)
     b2 = SK.bloom_build(vals.select("v"), "v", m * 2, k)
-    with pytest.raises(ValueError, match="CONFLICTING"):
-        SK.bloom_probe(vals, "id", "v", b1.unionByName(b2), m, k)
+    with pytest.raises(PySparkException, match="CONFLICTING"):
+        SK.bloom_probe(vals, "id", "v", b1.unionByName(b2), m, k).collect()
 
 
 def test_bloom_broadcast_budget_raises_and_dedup_falls_back(
@@ -487,16 +488,16 @@ def test_bloom_probe_shuffle_strategy_identical(spark):
     }
     assert b == s
     assert all(b[i] for i in range(200))  # no false negatives
-    # 'auto' over an 8-byte budget: no raise, same answers
-    a = {
-        r["id"]: r["maybe_present"]
-        for r in SK.bloom_probe(
-            probe, "id", "v", bloom, m, k,
-            max_broadcast_bytes=8, strategy="auto",
-        ).collect()
-    }
+    # 'auto' over an 8-byte budget: no raise (a warning), same answers
+    with pytest.warns(UserWarning, match="shuffle-probe"):
+        a = {
+            r["id"]: r["maybe_present"]
+            for r in SK.bloom_probe(
+                probe, "id", "v", bloom, m, k,
+                max_broadcast_bytes=8, strategy="auto",
+            ).collect()
+        }
     assert a == b
-    import pytest
 
     with pytest.raises(ValueError, match="strategy"):
         SK.bloom_probe(probe, "id", "v", bloom, m, k, strategy="nope")
@@ -529,7 +530,7 @@ def test_cms_never_undercounts_and_absent_is_zero(spark):
 
 
 def test_cms_merge_equals_whole_and_mixed_geometry_raises(spark):
-    import pytest
+    from pyspark.errors import PySparkException
 
     SK, df, cms = _cms_fixture(spark)
     whole = sorted(
@@ -546,12 +547,12 @@ def test_cms_merge_equals_whole_and_mixed_geometry_raises(spark):
     )
     assert merged == whole
     other = SK.cms_build(df, "v", width=128, depth=3)
-    with pytest.raises(ValueError, match="conflicting"):
-        SK.cms_merge(h1.unionByName(other))
-    with pytest.raises(ValueError, match="CONFLICTING"):
-        SK.cms_query(df, "id", "v", h1.unionByName(other), 64, 3)
-    with pytest.raises(ValueError, match="geometry|built with"):
-        SK.cms_query(df, "id", "v", cms, 128, 3)
+    with pytest.raises(PySparkException, match="conflicting"):
+        SK.cms_merge(h1.unionByName(other)).collect()
+    with pytest.raises(PySparkException, match="CONFLICTING"):
+        SK.cms_query(df, "id", "v", h1.unionByName(other), 64, 3).collect()
+    with pytest.raises(PySparkException, match="geometry|built with"):
+        SK.cms_query(df, "id", "v", cms, 128, 3).collect()
 
 
 def test_cms_query_defensive_on_raw_union(spark):
@@ -573,27 +574,20 @@ def test_cms_query_defensive_on_raw_union(spark):
 
 def test_cms_stats_mode_fused_scan(spark):
     """Round 17: ``_cms_stats_mode`` answers the geometry validation
-    AND the weightedness read in ONE aggregation job (the ingest gate
-    ran ``_cms_stats`` + ``cms_is_weighted`` back-to-back over the
-    same tree). Same raises, same mode semantics as the pair."""
-    import pytest
-
+    AND the weightedness read in ONE aggregation job — the ingest
+    cycle's eager check, which must refuse a geometry or mode flip
+    before it writes."""
     SK, df, cms = _cms_fixture(spark)
     wdf = df.withColumn("w", (F.col("id") % 7).cast("long"))
     wcms = SK.cms_build(wdf, "v", width=64, depth=3, weight="w")
 
-    # mode read matches cms_is_weighted across all three states
-    n_cnt, mode_cnt = SK._cms_stats_mode(cms, 64, 3, "t")
-    assert mode_cnt is SK.cms_is_weighted(cms) is False
-    assert n_cnt == SK._cms_stats(cms, 64, 3, "t")
-    _, mode_w = SK._cms_stats_mode(wcms, 64, 3, "t")
-    assert mode_w is SK.cms_is_weighted(wcms) is True
+    # the mode read across all three states
+    assert SK._cms_stats_mode(cms, 64, 3, "t") is False
+    assert SK._cms_stats_mode(wcms, 64, 3, "t") is True
     legacy = cms.filter("row >= 0")  # pre-sentinel tree
-    _, mode_legacy = SK._cms_stats_mode(legacy, 64, 3, "t")
-    assert mode_legacy is SK.cms_is_weighted(legacy) is None
+    assert SK._cms_stats_mode(legacy, 64, 3, "t") is None
 
-    # the pair's raises survive the fusion: mode mix, geometry mix,
-    # call-vs-tree mismatch
+    # raises: mode mix, geometry mix, call-vs-tree mismatch
     mixed = cms.unionByName(wcms)
     with pytest.raises(ValueError, match="mixes count-mode"):
         SK._cms_stats_mode(mixed, 64, 3, "t")
@@ -602,11 +596,10 @@ def test_cms_stats_mode_fused_scan(spark):
         SK._cms_stats_mode(cms.unionByName(other), 64, 3, "t")
     with pytest.raises(ValueError, match="built with"):
         SK._cms_stats_mode(cms, 128, 3, "t")
-    # the check_mode=False contract (_cms_stats delegation, the
-    # cms_query path) must NOT newly raise on a mode mix
-    assert SK._cms_stats(mixed, 64, 3, "t") == mixed.filter(
-        "row >= 0"
-    ).count()
+    # a probe answers whatever denomination the tree holds: cms_query
+    # must NOT raise on a mode mix
+    probe = spark.createDataFrame([(0, "dom0.com")], "id long, v string")
+    assert SK.cms_query(probe, "id", "v", mixed, 64, 3).count() == 1
 
 
 def test_cms_heavy_hitters_gate(spark):
@@ -827,11 +820,11 @@ def test_incremental_dedup_null_text_keep_one_pinned(spark, tmp_path):
 
 
 def test_bloom_probe_inline_validation_identical_and_raises(spark):
-    """Round 18: ``bloom_probe(validate='inline')`` removes the eager
-    full-tree ``_bloom_stats`` job — results stay bit-identical to the
-    eager path on a valid multi-partition sketch union, and the
-    no-false-negative guards still hold: a mismatched (m_bits, k) call
-    and a conflicting-geometry raw union both RAISE, now from the
+    """``bloom_probe`` validates sentinels only inline, with no eager
+    full-tree job: probing a raw multi-partition sketch union gives
+    the same results as probing its ``bloom_merge``, and the
+    no-false-negative guards still hold — a mismatched (m_bits, k)
+    call and a conflicting-geometry raw union both RAISE from the
     probe's first action (per-row assert evaluated BEFORE the
     defensive bit_or merge, so aggregation can never alias the
     conflict past the check)."""
@@ -850,39 +843,112 @@ def test_bloom_probe_inline_validation_identical_and_raises(spark):
     b1 = SK.bloom_build(ins.filter("id < 200").select("v"), "v", m, k)
     b2 = SK.bloom_build(ins.filter("id >= 200").select("v"), "v", m, k)
     tree = b1.unionByName(b2)
-    eager = {
+    merged = {
+        r["id"]: r["maybe_present"]
+        for r in SK.bloom_probe(
+            vals, "id", "v", SK.bloom_merge(tree), m, k
+        ).collect()
+    }
+    raw = {
         r["id"]: r["maybe_present"]
         for r in SK.bloom_probe(vals, "id", "v", tree, m, k).collect()
     }
-    inline = {
-        r["id"]: r["maybe_present"]
-        for r in SK.bloom_probe(
-            vals, "id", "v", tree, m, k, validate="inline"
-        ).collect()
-    }
-    assert inline == eager
-    assert all(inline[i] for i in range(0, 400, 2)), "false negative!"
+    assert raw == merged
+    assert all(raw[i] for i in range(0, 400, 2)), "false negative!"
 
-    # mismatched call parameters: the eager path raises at call time,
-    # the inline path at the first action — same guarantee, and the
+    # mismatched call parameters raise at the first action, and the
     # message still names the sentinel contract
     with pytest.raises(PySparkException, match="m_bits"):
-        SK.bloom_probe(
-            vals, "id", "v", tree, m * 2, k, validate="inline"
-        ).collect()
+        SK.bloom_probe(vals, "id", "v", tree, m * 2, k).collect()
     with pytest.raises(PySparkException, match="m_bits"):
-        SK.bloom_probe(
-            vals, "id", "v", tree, m, k + 1, validate="inline"
-        ).collect()
+        SK.bloom_probe(vals, "id", "v", tree, m, k + 1).collect()
     # conflicting-geometry union: bit_or of the two m sentinels could
     # alias past a POST-merge check; the per-row assert fires on
     # whichever row disagrees with the call
     other = SK.bloom_build(ins.select("v"), "v", m * 2, k)
     with pytest.raises(PySparkException, match="m_bits"):
         SK.bloom_probe(
-            vals, "id", "v", tree.unionByName(other), m, k,
-            validate="inline",
+            vals, "id", "v", tree.unionByName(other), m, k
         ).collect()
-    # unknown validate value still fails fast
-    with pytest.raises(ValueError, match="validate"):
-        SK.bloom_probe(vals, "id", "v", tree, m, k, validate="nope")
+
+
+def test_sketch_functions_build_without_jobs(spark):
+    """Sentinel validation rides inside the plan that reads the
+    sketch: at the default budget, building a probe, a query or a
+    merge runs no Spark job at all."""
+    from tests.conftest import in_job_group
+    from timebox_spark.operators import sketches as SK
+
+    m, k = 1 << 14, 5
+    vals = spark.range(0, 50).selectExpr("id", "md5(CAST(id AS STRING)) AS v")
+    bloom = SK.bloom_build(vals.select("v"), "v", m, k)
+    _, _, cms = _cms_fixture(spark)
+    for build in (
+        lambda: SK.bloom_probe(vals, "id", "v", bloom, m, k),
+        lambda: SK.bloom_merge(bloom.unionByName(bloom)),
+        lambda: SK.cms_query(vals, "id", "v", cms, 64, 3),
+        lambda: SK.cms_merge(cms.unionByName(cms)),
+    ):
+        _, jobs, _ = in_job_group(spark, build)
+        assert jobs == 0
+
+
+def test_sentinel_only_partition_mismatch_raises(spark, tmp_path):
+    """A persisted tree whose sentinels sit in their own partition (a
+    sentinel-only file): no predicate may let the parquet scan skip
+    that file before the assert sees it. Every mismatched or
+    mixed-geometry call raises at its first action; the valid tree
+    answers like the in-memory sketch."""
+    from pyspark.errors import PySparkException
+
+    from timebox_spark.operators import sketches as SK
+
+    def persist(sketch, key, path):
+        sketch.filter(f"{key} >= 0").write.parquet(f"{path}/cycle=0")
+        sketch.filter(f"{key} < 0").write.parquet(f"{path}/cycle=1")
+        return spark.read.parquet(path).drop("cycle")
+
+    def plant(sketch, key, path):
+        sketch.filter(f"{key} < 0").write.parquet(f"{path}/cycle=2")
+        return spark.read.parquet(path).drop("cycle")
+
+    m, k = 1 << 14, 5
+    vals = spark.range(0, 200).selectExpr("id", "md5(CAST(id AS STRING)) AS v")
+    bloom = SK.bloom_build(vals.filter("id % 2 = 0").select("v"), "v", m, k)
+    bpath = str(tmp_path / "bloom")
+    btree = persist(bloom, "word", bpath)
+
+    def probe(b, mm, kk):
+        return {
+            r["id"]: r["maybe_present"]
+            for r in SK.bloom_probe(vals, "id", "v", b, mm, kk).collect()
+        }
+
+    assert probe(btree, m, k) == probe(bloom, m, k)
+    with pytest.raises(PySparkException, match="m_bits"):
+        probe(btree, m * 2, k)
+    with pytest.raises(PySparkException, match="m_bits"):
+        probe(btree, m, k + 1)
+    bmixed = plant(SK.bloom_build(vals.select("v"), "v", m * 2, k), "word", bpath)
+    with pytest.raises(PySparkException, match="CONFLICTING"):
+        probe(bmixed, m, k)
+    with pytest.raises(PySparkException, match="geometries"):
+        SK.bloom_merge(bmixed).collect()
+
+    _, df, cms = _cms_fixture(spark)
+    cpath = str(tmp_path / "cms")
+    ctree = persist(cms, "row", cpath)
+
+    def est(c, w, d):
+        return sorted(map(tuple, SK.cms_query(df, "id", "v", c, w, d).collect()))
+
+    assert est(ctree, 64, 3) == est(cms, 64, 3)
+    with pytest.raises(PySparkException, match="built with"):
+        est(ctree, 128, 3)
+    with pytest.raises(PySparkException, match="built with"):
+        est(ctree, 64, 4)
+    cmixed = plant(SK.cms_build(df, "v", width=128, depth=3), "row", cpath)
+    with pytest.raises(PySparkException, match="CONFLICTING"):
+        est(cmixed, 64, 3)
+    with pytest.raises(PySparkException, match="conflicting"):
+        SK.cms_merge(cmixed).collect()

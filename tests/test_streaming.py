@@ -2750,11 +2750,11 @@ def test_ingest_bloom_gate_validates_without_eager_merge(
     still fail LOUDLY on (a) a mid-stream bloom_m change (call vs
     tree mismatch) and (b) a tree already mixing geometries (the case
     bloom_merge's check used to catch), both before any corpus state
-    is committed for the failing cycle. Round 18 moved the gates to
-    ``bloom_probe(validate='inline')`` — the SAME guards now fire as
-    per-row asserts inside the first gate action (a Spark execution
-    error carrying the sentinel message) instead of an eager
-    full-tree scan per probe per cycle."""
+    is committed for the failing cycle. ``bloom_probe`` checks the
+    sentinels only inline — the guards fire as per-row asserts inside
+    the first gate action (a Spark execution error carrying the
+    sentinel message) instead of an eager full-tree scan per probe per
+    cycle."""
     from pyspark.errors import PySparkException
 
     monkeypatch.setattr(ingest, "GATE_MIN_TREE_BYTES", 0)
@@ -2850,6 +2850,47 @@ def test_curate_and_ingest_stream_sink_releases_checkpoints(
     assert kept == {10, 11, 21}, kept
     after = set(jsc.getPersistentRDDs().keySet().toArray())
     assert after - before == set(), after - before
+
+
+def test_curate_and_ingest_stream_empty_batch_still_consolidates(
+    spark, tmp_path
+):
+    """A micro-batch that curation empties runs no cycle, but a
+    consolidation due on its cycle id must still fold the earlier
+    cycles: batch 2 (all rows gated) lands on the
+    ``consolidate_every=2`` boundary, so cycles 0 and 1 end up in one
+    ``cycle=1`` partition."""
+    base = (
+        "the quick brown fox jumps over the lazy dog and keeps "
+        "running through the long meadow toward the river bank"
+    )
+    other = (
+        "completely different subject matter about integer codecs "
+        "and columnar storage layouts with delta encoding schemes"
+    )
+    src = str(tmp_path / "raw_docs_empty_boundary")
+    for b in ([(10, base, "en")], [(20, other, "en")], [(30, "short", "en")]):
+        spark.createDataFrame(
+            b, "doc_id long, text string, lang string"
+        ).coalesce(1).write.mode("append").parquet(src)
+    stream = spark.readStream.schema(
+        "doc_id long, text string, lang string"
+    ).option("maxFilesPerTrigger", 1).parquet(src)
+    store = str(tmp_path / "store_empty_boundary")
+    ingest.curate_and_ingest_stream(
+        stream, store, str(tmp_path / "ck_empty_boundary"),
+        min_quality_q=0, min_tokens=6, near_dup=False, bloom_m=None,
+        consolidate_every=2,
+    ).start().awaitTermination()
+    parts = sorted(
+        d for d in os.listdir(f"{store}/corpus") if d.startswith("cycle=")
+    )
+    assert parts == ["cycle=1"], parts
+    kept = {
+        r["doc_id"]
+        for r in spark.read.parquet(f"{store}/corpus").collect()
+    }
+    assert kept == {10, 20}, kept
 
 
 def test_tree_schema_cache_invalidated_on_recreated_store(

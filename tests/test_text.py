@@ -1957,14 +1957,15 @@ def test_cms_build_weighted_never_undercounts_and_matches_repeats(spark):
     assert data(wsk) == data(csk)
     # the weightedness sentinel keeps the modes apart: a raw union of
     # a count and a weighted sketch refuses to merge or be classified
-    assert SK.cms_is_weighted(wsk) is True
-    assert SK.cms_is_weighted(csk) is False
+    assert SK._cms_stats_mode(wsk, W, D, "t") is True
+    assert SK._cms_stats_mode(csk, W, D, "t") is False
     import pytest as _pytest
+    from pyspark.errors import PySparkException
 
     with _pytest.raises(ValueError, match="mix"):
-        SK.cms_is_weighted(wsk.unionByName(csk))
-    with _pytest.raises(ValueError, match="conflicting"):
-        SK.cms_merge(wsk.unionByName(csk))
+        SK._cms_stats_mode(wsk.unionByName(csk), W, D, "t")
+    with _pytest.raises(PySparkException, match="conflicting"):
+        SK.cms_merge(wsk.unionByName(csk)).collect()
 
 
 def test_curate_near_dup_stage_drops_near_copies(spark):

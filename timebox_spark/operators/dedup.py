@@ -2122,7 +2122,6 @@ def incremental_exact_dedup(
     bloom_m: int = 1 << 20,
     bloom_k: int = 5,
     owned_rdds: list | None = None,
-    sketch_validate: str = "eager",
 ) -> DataFrame:
     """Incremental ingest dedup: rows of ``new_batch`` whose
     normalized-text fingerprint appears nowhere in the existing
@@ -2166,10 +2165,12 @@ def incremental_exact_dedup(
     are bit-identical to the gate-less path (pytest-pinned); the
     sketch is exact-mergeable across cycles (``bloom_merge``) so it
     is maintained incrementally like fps, and an over-budget sketch
-    (``sketches.BloomBroadcastBudgetError``) degrades to the
-    SHUFFLE-probe strategy with a warning — the gate survives past
+    degrades to the SHUFFLE-probe strategy with a warning
+    (``bloom_probe(strategy='auto')``) — the gate survives past
     broadcast scale (the sketch side is ~bits/32 narrow rows, far
-    below the fps tree) instead of OOMing the driver.
+    below the fps tree) instead of OOMing the driver. A sketch whose
+    sentinels disagree with (``bloom_m``, ``bloom_k``) raises from
+    the gate's first action (see ``bloom_probe``).
 
     ``owned_rdds`` (round-14 review): the gated plan references the
     probe result twice, and Spark does not reuse the exchange (the
@@ -2180,13 +2181,6 @@ def incremental_exact_dedup(
     Without it the probe subplan (batch md5 fan-out + two small
     shuffles) evaluates per reference — correct, just duplicated
     map-side work.
-
-    ``sketch_validate`` (round 18) is forwarded to ``bloom_probe``:
-    pass ``'inline'`` when the caller owns the sketch tree's write
-    path (``run_ingest_cycle`` does) to fold sentinel validation into
-    the probe plan as a per-row assert instead of a separate eager
-    full-tree scan per cycle — mismatched/mixed trees still raise, at
-    the first action that consumes the gate.
 
     Session side effect (caveat): when the pruned-scan path plans,
     this call raises the CALLER's session conf
@@ -2214,10 +2208,7 @@ def incremental_exact_dedup(
         fp_binary = False
     probe = None
     if corpus_bloom is not None:
-        from timebox_spark.operators.sketches import (
-            BloomBroadcastBudgetError,
-            bloom_probe,
-        )
+        from timebox_spark.operators.sketches import bloom_probe
 
         # probe DISTINCT fingerprints (not ids): smaller probe side,
         # and NULL-fp rows (NULL text) or NULL ids never ride through
@@ -2230,31 +2221,14 @@ def incremental_exact_dedup(
             batch_fp.select("__fp").filter(F.col("__fp").isNotNull())
             .distinct()
         )
-        try:
-            probe = bloom_probe(
-                fps_only, "__fp", "__fp", corpus_bloom, bloom_m, bloom_k,
-                validate=sketch_validate,
-            )
-        except BloomBroadcastBudgetError as e:
-            # over-budget sketch: KEEP the gate but probe via the
-            # shuffle strategy (round 14) — identical probe results,
-            # no broadcast; the sketch side is ~bits/32 narrow rows,
-            # strictly smaller than the fingerprint tree the gate
-            # exists to avoid shuffling. Loud anyway, so the operator
-            # re-sizes or shards the sketch deliberately.
-            import warnings
-
-            warnings.warn(
-                f"incremental_exact_dedup: Bloom pre-gate over the "
-                f"broadcast budget — degrading to the shuffle-probe "
-                f"strategy for this cycle ({e})",
-                UserWarning,
-                stacklevel=2,
-            )
-            probe = bloom_probe(
-                fps_only, "__fp", "__fp", corpus_bloom, bloom_m,
-                bloom_k, strategy="shuffle", validate=sketch_validate,
-            )
+        # an over-budget sketch KEEPS the gate via the shuffle probe
+        # (round 14): identical results, no broadcast, and the sketch
+        # side is ~bits/32 narrow rows — strictly smaller than the
+        # fingerprint tree the gate exists to avoid shuffling
+        probe = bloom_probe(
+            fps_only, "__fp", "__fp", corpus_bloom, bloom_m, bloom_k,
+            strategy="auto",
+        )
     if probe is not None:
         if owned_rdds is not None:
             # the probe result is referenced by two plan branches and

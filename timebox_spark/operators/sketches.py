@@ -210,73 +210,61 @@ class BloomBroadcastBudgetError(ValueError):
     """The sketch's estimated broadcast size exceeds the budget —
     raised by ``bloom_probe`` BEFORE attempting the broadcast (the
     alternative is a silent driver/executor OOM at exactly the corpus
-    size the gate was meant to serve).
-    ``dedup.incremental_exact_dedup`` catches this and falls back to
-    the plain fingerprint anti-join (logged via ``warnings``)."""
+    size the gate was meant to serve). ``strategy='auto'`` degrades
+    to the shuffle probe instead of raising."""
 
 
-def _bloom_stats(bloom: DataFrame, m_bits: int, k: int, ctx: str) -> int:
-    """One-scan validation of a sketch before probing: (a) embedded
-    (m_bits, k) sentinels must match the caller's — absent sentinels
-    (a pre-round-13 or hand-built sketch) pass silently, CONFLICTING
-    sentinels (a raw union of different-geometry sketches) raise;
-    (b) returns the distinct-word count for the broadcast budget
-    check. Replaces the old 2-row sentinel collect, which hid
-    conflicts (dict comprehension kept the last row) and couldn't
-    size the broadcast."""
-    row = bloom.agg(
-        F.count_distinct("word").alias("n_words"),
-        F.count_distinct(
-            F.when(F.col("word") == -1, F.col("bits"))
-        ).alias("n_m"),
-        F.count_distinct(
-            F.when(F.col("word") == -2, F.col("bits"))
-        ).alias("n_k"),
-        F.max(F.when(F.col("word") == -1, F.col("bits"))).alias("m"),
-        F.max(F.when(F.col("word") == -2, F.col("bits"))).alias("k"),
-    ).collect()[0]
-    if row["n_m"] > 1 or row["n_k"] > 1:
-        raise ValueError(
-            f"{ctx}: sketch carries CONFLICTING (m_bits, k) sentinel "
-            f"rows — it is a raw union of sketches built with "
-            f"different geometries; merge same-geometry sketches with "
-            f"bloom_merge (which raises on this) and rebuild otherwise"
-        )
-    got_m, got_k = row["m"], row["k"]
-    if (got_m is not None and got_m != m_bits) or (
-        got_k is not None and got_k != k
-    ):
-        raise ValueError(
-            f"{ctx}: sketch was built with (m_bits={got_m}, k={got_k}) "
-            f"but the call uses (m_bits={m_bits}, k={k}) — a mismatch "
-            f"silently breaks the no-false-negative guarantee (a dup "
-            f"would bypass exact dedup as 'definitely new'); pass the "
-            f"build-time parameters"
-        )
-    return int(row["n_words"])
+def _assert_rows(df: DataFrame, ok: Column, msg: Column) -> DataFrame:
+    """``df`` with ``ok`` asserted on every row, inside the plan that
+    computes the rows: the first action that scans them raises a
+    Spark execution error carrying ``msg``. ``assert_true`` yields
+    NULL when ``ok`` holds, so the coalesce keeps every row and the
+    filter's only effect is to force the evaluation.
+
+    This is the one sentinel check of a persisted sketch. No
+    predicate that drops sentinel rows may be applied to the same
+    plan, below or above this filter: the optimizer pushes it into
+    the parquet scan (through a merge's aggregate, too), row-group
+    stats skip a sentinel-only file, and the check passes without
+    seeing the sentinels."""
+    return df.filter(F.coalesce(F.assert_true(ok, msg), F.lit(True)))
+
+
+def _assert_sentinels_agree(
+    df: DataFrame, keys: list[str], val: str, out: Column, msg: str
+) -> DataFrame:
+    """The merge of a sketch union (``groupBy(*keys)``, ``out`` the
+    merged value as ``__out``) with its conflict check folded into
+    the same aggregate: per sentinel key (``keys[0]`` < 0) the
+    union's min (``__mn``) and max of ``val`` must be equal. ``msg``
+    is a format string over (``keys[0]``, min, max)."""
+    merged = df.groupBy(*keys).agg(
+        out.alias("__out"), F.min(val).alias("__mn"), F.max(val).alias("__mx")
+    )
+    return _assert_rows(
+        merged,
+        (F.col(keys[0]) >= 0) | (F.col("__mn") == F.col("__mx")),
+        F.format_string(msg, F.col(keys[0]), F.col("__mn"), F.col("__mx")),
+    )
 
 
 def bloom_merge(blooms: DataFrame) -> DataFrame:
     """Union of Bloom sketches built with the SAME (m_bits, k): OR the
     words together. Exact (Bloom union loses nothing), so per-cycle
     sketch partitions merge at read time without a rebuild. Mixed
-    parameters RAISE: the input's sentinel rows must agree (OR-ing
-    bitsets of different geometries is silent corruption)."""
-    bad = (
-        blooms.filter(F.col("word") < 0)
-        .groupBy("word")
-        .agg(F.count_distinct("bits").alias("n"))
-        .filter(F.col("n") > 1)
-        .limit(1)
-        .count()
-    )
-    if bad:
-        raise ValueError(
-            "bloom_merge: inputs carry conflicting (m_bits, k) "
-            "sentinels — sketches of different geometries cannot be "
-            "merged; rebuild with one parameter set"
-        )
-    return blooms.groupBy("word").agg(F.bit_or("bits").alias("bits"))
+    parameters RAISE (OR-ing bitsets of different geometries is
+    silent corruption): the input's sentinel rows must agree, checked
+    in the merge's own aggregate, so the raise comes from the first
+    action that computes the merged frame."""
+    return _assert_sentinels_agree(
+        blooms,
+        ["word"],
+        "bits",
+        F.bit_or("bits"),
+        "bloom_merge: inputs carry conflicting (m_bits, k) sentinels "
+        "(word %d holds both %d and %d) — sketches of different "
+        "geometries cannot be merged; rebuild with one parameter set",
+    ).select("word", F.col("__out").alias("bits"))
 
 
 def bloom_probe(
@@ -288,7 +276,6 @@ def bloom_probe(
     k: int = 5,
     max_broadcast_bytes: int | None = None,
     strategy: str = "broadcast",
-    validate: str = "eager",
 ) -> DataFrame:
     """(id_col, maybe_present) membership probe against a
     ``bloom_build`` sketch with the SAME (m_bits, k): maybe_present is
@@ -296,31 +283,36 @@ def bloom_probe(
     value that was built in always probes true), false positives at
     the sketch's design rate. The sketch is broadcast and the probe
     rows fan out k-fold map-side; the only shuffle is the
-    probe-side-sized groupBy back to one row per id. The sketch's
-    embedded (m_bits, k) sentinels are validated against the call's —
-    a mismatch (or a raw union of conflicting-geometry sketches)
-    raises instead of silently losing the no-false-negative
-    guarantee.
+    probe-side-sized groupBy back to one row per id.
+
+    The sketch's embedded (m_bits, k) sentinels are checked against
+    the call's by a per-row assert inside the probe plan, applied
+    while the sketch side is scanned and before the ``bit_or`` merge
+    below, so a raw union of conflicting geometries raises on
+    whichever row disagrees (aggregation cannot alias it past the
+    check). Absent sentinels (a hand-built sketch) pass. A mismatch
+    raises from the FIRST action that scans the sketch side, as a
+    ``PySparkException`` carrying the sentinel message — not at call
+    time. An empty probe side can let AQE skip the sketch scan; then
+    nothing raises, and nothing is probed either.
 
     The sketch is defensively re-aggregated per word (``bit_or``)
-    before the broadcast join (advisor round 13): a sketch with
-    MULTIPLE rows per word — a raw union of per-cycle sketches, or a
-    consolidated tree read without ``bloom_merge`` — would otherwise
-    fan the left join out per duplicate row, and ``min(hit)`` would
-    require the bit set in EVERY copy: a true member could probe
+    before the join (advisor round 13): a sketch with MULTIPLE rows
+    per word — a raw union of per-cycle sketches, or a consolidated
+    tree read without ``bloom_merge`` — would otherwise fan the left
+    join out per duplicate row, and ``min(hit)`` would require the bit
+    set in EVERY copy: a true member could probe
     ``maybe_present=false`` and bypass exact dedup as definitely new.
-    Sentinel rows are idempotent under ``bit_or`` once the conflict
-    check above has passed (same geometry ⇒ identical sentinel bits).
 
     ``max_broadcast_bytes`` (default: module-level
-    ``BLOOM_BROADCAST_BUDGET_BYTES``, 1 GiB) bounds the estimated
-    broadcast size (distinct words × ~20 B, counted in the same
-    validation scan): above it the probe raises
+    ``BLOOM_BROADCAST_BUDGET_BYTES``, 1 GiB) bounds the broadcast,
+    estimated by the structural bound distinct words ≤ m_bits/32 + 2
+    sentinels at ~20 B a row. Only when that bound exceeds the budget
+    does a count of the sketch's distinct words run (the one eager
+    job); above the budget the probe raises
     :class:`BloomBroadcastBudgetError` with sharding advice BEFORE
     the broadcast is attempted — a sketch sized for 10¹⁰ docs must
-    fail loudly, not OOM the driver. Callers that can degrade
-    gracefully (``dedup.incremental_exact_dedup``) catch it and fall
-    back to the SHUFFLE strategy below.
+    fail loudly, not OOM the driver.
 
     ``strategy`` (round 14 — the past-broadcast-scale path):
 
@@ -334,33 +326,9 @@ def bloom_probe(
       that is ~docs/3 narrow rows, strictly smaller than the full
       fingerprint tree the gate replaces). Results are identical to
       'broadcast' bit-for-bit;
-    - ``'auto'``: 'broadcast' within budget, else 'shuffle'.
-
-    ``validate`` (round 18 — the gates' two eager full-tree
-    validation jobs removed):
-
-    - ``'eager'`` (default): run the ``_bloom_stats`` scan BEFORE
-      building the probe — sentinel mismatches raise at call time and
-      the scan's distinct-word count sizes the broadcast-budget check
-      exactly. The right default for arbitrary / foreign sketches.
-    - ``'inline'``: no pre-scan. Sentinel validation is woven into
-      the probe plan as a PER-ROW assert evaluated while the sketch
-      side is read (before the defensive ``bit_or`` merge, so it is
-      at least as strong as the eager check: every sentinel row is
-      compared against the call's (m_bits, k) individually — the
-      ``bit_or``-aliasing that makes post-merge checks weak cannot
-      happen, and a conflicting-geometry union raises on whichever
-      row disagrees). Absent sentinels (pre-round-13 or hand-built
-      sketches) pass silently, exactly like the eager path. The
-      budget check uses the structural bound distinct words ≤
-      m_bits/32 + 2 sentinels; if that bound exceeds the budget the
-      eager count runs anyway, so over-budget behavior is unchanged.
-      A mismatch raises from the FIRST action that consumes the probe
-      (as a Spark execution error carrying the same message) instead
-      of at call time — callers that own the tree's write path and
-      probe it in the same breath (``run_ingest_cycle``'s gates, the
-      measured ~2 full-tree scans/cycle this removes) take this; keep
-      the default for sketches you didn't write."""
+    - ``'auto'``: 'broadcast' within budget, else 'shuffle' with a
+      warning, so the operator re-sizes or shards the sketch
+      deliberately (the dedup gates use this)."""
     from timebox_spark.operators.dedup import _md5_u32
 
     if strategy not in ("broadcast", "shuffle", "auto"):
@@ -368,32 +336,28 @@ def bloom_probe(
             f"bloom_probe: unknown strategy {strategy!r} — expected "
             f"'broadcast', 'shuffle', or 'auto'"
         )
-    if validate not in ("eager", "inline"):
-        raise ValueError(
-            f"bloom_probe: unknown validate {validate!r} — expected "
-            f"'eager' or 'inline'"
-        )
     budget = (
         BLOOM_BROADCAST_BUDGET_BYTES
         if max_broadcast_bytes is None
         else max_broadcast_bytes
     )
-    if validate == "inline":
-        # structural bound: a sketch holds at most m_bits/32 distinct
-        # data words plus the 2 sentinel rows — no scan needed to
-        # budget-check sketches sized sanely. Past the budget, fall
-        # back to the exact eager count (which also validates), so an
-        # over-budget sketch raises/degrades exactly as before.
-        est_bytes = (m_bits // 32 + 2) * _BLOOM_ROW_BYTES
-        if est_bytes > budget and strategy != "shuffle":
-            n_words = _bloom_stats(bloom, m_bits, k, "bloom_probe")
-            est_bytes = n_words * _BLOOM_ROW_BYTES
-            validate = "eager"  # the stats scan already validated
-    else:
-        n_words = _bloom_stats(bloom, m_bits, k, "bloom_probe")
-        est_bytes = n_words * _BLOOM_ROW_BYTES
+    n_words = m_bits // 32 + 2
+    if n_words * _BLOOM_ROW_BYTES > budget and strategy != "shuffle":
+        n_words = bloom.select("word").distinct().count()
+    est_bytes = n_words * _BLOOM_ROW_BYTES
     if strategy == "auto":
-        strategy = "shuffle" if est_bytes > budget else "broadcast"
+        strategy = "broadcast"
+        if est_bytes > budget:
+            import warnings
+
+            warnings.warn(
+                f"bloom_probe: sketch holds {n_words} words ≈ "
+                f"{est_bytes} bytes, over the {budget}-byte broadcast "
+                f"budget — degrading to the shuffle-probe strategy",
+                UserWarning,
+                stacklevel=2,
+            )
+            strategy = "shuffle"
     if strategy == "broadcast" and est_bytes > budget:
         raise BloomBroadcastBudgetError(
             f"bloom_probe: sketch holds {n_words} words ≈ {est_bytes} "
@@ -406,38 +370,23 @@ def bloom_probe(
             f"max_broadcast_bytes only with matching driver/executor "
             f"memory headroom"
         )
-    if validate == "inline":
-        # per-row sentinel assert, evaluated while the sketch side is
-        # scanned and BEFORE the bit_or merge below (pre-aggregation:
-        # a conflicting-geometry union raises on whichever row
-        # disagrees — bit_or can never alias it past this check).
-        # assert_true yields NULL when the condition holds, so the
-        # coalesce keeps every row and the filter's only effect is to
-        # force the evaluation.
-        sentinel_ok = (
-            F.when(F.col("word") == -1, F.col("bits") == F.lit(int(m_bits)))
-            .when(F.col("word") == -2, F.col("bits") == F.lit(int(k)))
-            .otherwise(F.lit(True))
-        )
-        bloom = bloom.filter(
-            F.coalesce(
-                F.assert_true(
-                    sentinel_ok,
-                    F.lit(
-                        f"bloom_probe: sketch sentinel mismatch — the "
-                        f"tree carries a (m_bits, k) sentinel different "
-                        f"from the call's (m_bits={m_bits}, k={k}), or "
-                        f"is a raw union of different geometries; a "
-                        f"mismatch silently breaks the "
-                        f"no-false-negative guarantee (a dup would "
-                        f"bypass exact dedup as 'definitely new') — "
-                        f"pass the build-time parameters or rebuild "
-                        f"with one geometry"
-                    ),
-                ),
-                F.lit(True),
-            )
-        )
+    bloom = _assert_rows(
+        bloom,
+        F.when(F.col("word") == -1, F.col("bits") == F.lit(int(m_bits)))
+        .when(F.col("word") == -2, F.col("bits") == F.lit(int(k)))
+        .otherwise(F.lit(True)),
+        F.format_string(
+            f"bloom_probe: sketch sentinel word %d holds %d, but the "
+            f"call uses (m_bits={m_bits}, k={k}) — the sketch was "
+            f"built with other parameters, or is a raw union of "
+            f"sketches with CONFLICTING geometries; a mismatch "
+            f"silently breaks the no-false-negative guarantee (a dup "
+            f"would bypass exact dedup as 'definitely new') — pass the "
+            f"build-time parameters or rebuild with one geometry",
+            F.col("word"),
+            F.col("bits"),
+        ),
+    )
     bloom = bloom.groupBy("word").agg(F.bit_or("bits").alias("bits"))
     pos = [
         (_md5_u32(F.col(col), str(i)) % F.lit(m_bits)) for i in range(k)
@@ -473,48 +422,34 @@ CMS_DEPTH = 4
 CMS_SALT = "cms"
 
 
-def _cms_stats(cms: DataFrame, width: int, depth: int, ctx: str) -> int:
-    """One-scan sentinel validation for a count-min sketch (the
-    bloom _bloom_stats pattern): conflicting embedded (width, depth)
-    sentinels raise (a raw union of different geometries), a mismatch
-    with the caller's parameters raises (wrong-width positions silently
-    under-count), absent sentinels pass. Returns the data-row count
-    for the broadcast budget check."""
-    return _cms_stats_mode(cms, width, depth, ctx, check_mode=False)[0]
-
-
 def _cms_stats_mode(
-    cms: DataFrame,
-    width: int,
-    depth: int,
-    ctx: str,
-    check_mode: bool = True,
-) -> tuple[int, bool | None]:
-    """``_cms_stats``'s geometry validation and ``cms_is_weighted``'s
-    mode read fused into ONE aggregation job (round 17): the ingest
-    gate ran them back-to-back over the same tree, paying two
-    full-tree scans where one answers both. Returns (data-row count,
-    weighted mode: True/False per the row −3 sentinel, None for
-    legacy sentinel-less trees). ``check_mode=True`` raises on a
-    count/weighted MIX exactly like ``cms_is_weighted``;
-    ``check_mode=False`` is the plain ``_cms_stats`` contract
-    (probes answer whatever denomination the tree holds)."""
-    row = cms.agg(
-        F.count(F.when(F.col("row") >= 0, 1)).alias("n_rows"),
-        F.count_distinct(
-            F.when(F.col("row") == -1, F.col("cnt"))
-        ).alias("n_w"),
-        F.count_distinct(
-            F.when(F.col("row") == -2, F.col("cnt"))
-        ).alias("n_d"),
-        F.count_distinct(
-            F.when(F.col("row") == -3, F.col("cnt"))
-        ).alias("n_mode"),
-        F.max(F.when(F.col("row") == -1, F.col("cnt"))).alias("w"),
-        F.max(F.when(F.col("row") == -2, F.col("cnt"))).alias("d"),
-        F.max(F.when(F.col("row") == -3, F.col("cnt"))).alias("mode"),
-    ).collect()[0]
-    if row["n_w"] > 1 or row["n_d"] > 1:
+    cms: DataFrame, width: int, depth: int, ctx: str
+) -> bool | None:
+    """The eager sentinel check of a count-min tree, for a caller that
+    must refuse a geometry or mode flip BEFORE it writes
+    (``run_ingest_cycle``; the probes check inline instead). One
+    aggregation job over the sentinel rows raises on conflicting
+    (width, depth) sentinels (a raw union of different geometries), a
+    mismatch with the caller's parameters, or a count/weighted MIX.
+    Returns the weighted mode: True/False per the row −3 sentinel,
+    None for legacy sentinel-less trees."""
+
+    def sentinel(r: int) -> Column:
+        return F.when(F.col("row") == r, F.col("cnt"))
+
+    row = (
+        cms.filter(F.col("row") < 0)
+        .agg(
+            F.min(sentinel(-1)).alias("w_lo"),
+            F.max(sentinel(-1)).alias("w"),
+            F.min(sentinel(-2)).alias("d_lo"),
+            F.max(sentinel(-2)).alias("d"),
+            F.min(sentinel(-3)).alias("mode_lo"),
+            F.max(sentinel(-3)).alias("mode"),
+        )
+        .collect()[0]
+    )
+    if row["w_lo"] != row["w"] or row["d_lo"] != row["d"]:
         raise ValueError(
             f"{ctx}: sketch carries CONFLICTING (width, depth) "
             f"sentinels — it is a raw union of sketches built with "
@@ -532,14 +467,13 @@ def _cms_stats_mode(
             f"depth={depth}) — mismatched geometry silently corrupts "
             f"estimates; pass the build-time parameters"
         )
-    if check_mode and row["n_mode"] > 1:
+    if row["mode_lo"] != row["mode"]:
         raise ValueError(
             f"{ctx}: sketch mixes count-mode and weighted-mode "
             f"partitions — their sums answer neither 'how many rows' "
             f"nor 'how much weight'; rebuild the tree in one mode"
         )
-    mode = None if row["mode"] is None else bool(row["mode"])
-    return int(row["n_rows"]), mode
+    return None if row["mode"] is None else bool(row["mode"])
 
 
 def cms_build(
@@ -622,59 +556,29 @@ def cms_build(
 def cms_merge(sketches: DataFrame) -> DataFrame:
     """Sum of count-min sketches built with the SAME (width, depth):
     counters add cell-wise (CMS merge is exact — the merged sketch
-    equals the sketch of the concatenated data). Mixed geometries
-    RAISE via the sentinel check. Sentinel rows are deduplicated, not
-    summed (they are metadata, not counters)."""
-    bad = (
-        sketches.filter(F.col("row") < 0)
-        .groupBy("row")
-        .agg(F.count_distinct("cnt").alias("n"))
-        .filter(F.col("n") > 1)
-        .limit(1)
-        .count()
+    equals the sketch of the concatenated data). Sentinel rows are
+    deduplicated, not summed (they are metadata, not counters), and
+    mixed geometries or count/weighted modes RAISE: per sentinel row
+    the input must agree, checked in the merge's own aggregate, so the
+    raise comes from the first action that computes the merged
+    frame."""
+    return _assert_sentinels_agree(
+        sketches,
+        ["row", "idx"],
+        "cnt",
+        F.sum("cnt"),
+        "cms_merge: inputs carry conflicting sentinels (width, depth, "
+        "or count-vs-weighted mode; row %d holds both %d and %d) — "
+        "sketches of different geometries hash to different cells, "
+        "and a count/weighted mix answers neither denomination; "
+        "rebuild with one parameter set",
+    ).select(
+        "row",
+        "idx",
+        F.when(F.col("row") < 0, F.col("__mn"))
+        .otherwise(F.col("__out"))
+        .alias("cnt"),
     )
-    if bad:
-        raise ValueError(
-            "cms_merge: inputs carry conflicting sentinels (width, "
-            "depth, or count-vs-weighted mode) — sketches of "
-            "different geometries hash to different cells, and a "
-            "count/weighted mix answers neither denomination; "
-            "rebuild with one parameter set"
-        )
-    data = (
-        sketches.filter(F.col("row") >= 0)
-        .groupBy("row", "idx")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    return data.unionByName(
-        sketches.filter(F.col("row") < 0).distinct()
-    )
-
-
-def cms_is_weighted(cms: DataFrame) -> bool | None:
-    """Read a sketch's weightedness sentinel (row −3): True =
-    weighted (``cms_build(weight=...)``), False = count, None =
-    legacy sketch built before the sentinel existed (treat as count
-    — weighted builds have always stamped it). Raises on a
-    count/weighted MIX (a raw union of both modes — summing them
-    answers neither denomination)."""
-    vals = {
-        r["cnt"]
-        for r in cms.filter(F.col("row") == -3)
-        .select("cnt")
-        .distinct()
-        .collect()
-    }
-    if len(vals) > 1:
-        raise ValueError(
-            "cms_is_weighted: sketch mixes count-mode and "
-            "weighted-mode partitions — their sums answer neither "
-            "'how many rows' nor 'how much weight'; rebuild the tree "
-            "in one mode"
-        )
-    if not vals:
-        return None
-    return bool(vals.pop())
 
 
 def cms_query(
@@ -694,13 +598,27 @@ def cms_query(
     cell rows from a raw union of per-cycle sketches merge exactly,
     ``cms_merge`` semantics) and broadcast; probe rows fan out
     depth-fold map-side, and the only shuffle is the probe-sized
-    groupBy back to one row per id. Geometry sentinels are validated
-    against the call's; the broadcast budget is enforced like
-    ``bloom_probe``'s (:class:`BloomBroadcastBudgetError` — a sketch
-    is depth·width cells, so this only fires on degenerate widths)."""
+    groupBy back to one row per id.
+
+    The sketch's (width, depth) sentinels are checked against the
+    call's by a per-row assert applied while the sketch side is
+    scanned, before the re-aggregation; the sentinel groups are
+    aggregated too and dropped by the probe join (a sentinel-dropping
+    filter would be pushed into the scan and could skip a
+    sentinel-only file). A mismatch or a raw union of conflicting
+    geometries raises from the FIRST action that scans the sketch
+    side, as a ``PySparkException`` carrying the sentinel message —
+    not at call time. An empty probe side can let AQE skip the sketch
+    scan; then nothing raises, and nothing is probed either. The
+    mode sentinel is not checked: a probe answers whatever
+    denomination the tree holds.
+
+    The broadcast budget is enforced like ``bloom_probe``'s
+    (:class:`BloomBroadcastBudgetError`) on the structural bound of
+    depth·width cells plus 3 sentinels; only past the budget does a
+    row count run, so this fires only on degenerate widths."""
     from timebox_spark.operators.dedup import _md5_u32
 
-    n_rows = _cms_stats(cms, width, depth, "cms_query")
     budget = (
         BLOOM_BROADCAST_BUDGET_BYTES
         if max_broadcast_bytes is None
@@ -710,20 +628,34 @@ def cms_query(
     # the re-aggregated sketch, bounded by depth·width cells — a tall
     # raw union of thousands of per-cycle sketches must not spuriously
     # raise for a broadcast that collapses to that bound
-    est_bytes = min(n_rows, depth * width) * 24
+    n_cells = depth * width + 3
+    if n_cells * 24 > budget:
+        n_cells = min(n_cells, cms.count())
+    est_bytes = n_cells * 24
     if est_bytes > budget:
         raise BloomBroadcastBudgetError(
-            f"cms_query: sketch holds {min(n_rows, depth * width)} "
+            f"cms_query: sketch holds {n_cells} "
             f"post-aggregation cells ≈ {est_bytes} "
             f"bytes broadcast, over the {budget}-byte budget — use a "
             f"smaller width or raise max_broadcast_bytes with matching "
             f"executor memory headroom"
         )
-    cmsd = (
-        cms.filter(F.col("row") >= 0)
-        .groupBy("row", "idx")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    cmsd = _assert_rows(
+        cms,
+        F.when(F.col("row") == -1, F.col("cnt") == F.lit(int(width)))
+        .when(F.col("row") == -2, F.col("cnt") == F.lit(int(depth)))
+        .otherwise(F.lit(True)),
+        F.format_string(
+            f"cms_query: sketch sentinel row %d holds %d, but the call "
+            f"uses (width={width}, depth={depth}) — the sketch was "
+            f"built with other parameters, or is a raw union of "
+            f"sketches with CONFLICTING geometries; mismatched "
+            f"geometry silently corrupts estimates — pass the "
+            f"build-time parameters or rebuild with one parameter set",
+            F.col("row"),
+            F.col("cnt"),
+        ),
+    ).groupBy("row", "idx").agg(F.sum("cnt").alias("cnt"))
     cells = [
         F.struct(
             F.lit(j).cast("int").alias("row"),

@@ -4,8 +4,10 @@ The reference's entire type system is ``type_char ∈ {'i','u','f'}`` ×
 ``bytes_per_value ∈ {1,2,4,8}`` (/root/reference/timebox/utils/
 numpy_utils.py:60-100) with a datetime64[s] index. Spark has no
 unsigned or half-float types, so we widen losslessly and record the
-original type in ``StructField.metadata["timebox"]`` so a round trip
-through the ``.npb`` codec (timebox_spark.sources.npb) can narrow back.
+original type in ``StructField.metadata["timebox"]``. That stamp is
+for readers of the schema; nothing narrows back from it. The ``.npb``
+codec (timebox_spark.sources.npb) keeps each column's original dtype
+in its own file header.
 
 Widening rules (SURVEY.md §1.4):
   u8→Short, u16→Int, u32→Long, u64→Decimal(20,0), f16→Float.
@@ -70,16 +72,6 @@ def widen_pandas_for_arrow(pdf):
         elif name == "uint64":
             out[col] = [decimal.Decimal(int(v)) for v in out[col].to_numpy()]
     return out
-
-# Inverse map for narrowing back when the Spark type was not widened.
-_SPARK_TO_TYPE: dict[str, tuple[str, int]] = {
-    "byte": ("i", 1),
-    "short": ("i", 2),
-    "integer": ("i", 4),
-    "long": ("i", 8),
-    "float": ("f", 4),
-    "double": ("f", 8),
-}
 
 
 def spark_type_for(type_char: str, bytes_per_value: int) -> T.DataType:
@@ -147,15 +139,3 @@ def timebox_schema_from_pandas(pdf) -> T.StructType:
         fields.append(field_for(col, char, width))
     return T.StructType(fields)
 
-
-def original_type(field: T.StructField) -> tuple[str, int]:
-    """Recover the reference (type_char, width) for a field: from
-    metadata if the column was widened at ingest, else from the Spark
-    type itself."""
-    meta = field.metadata.get(METADATA_KEY) if field.metadata else None
-    if meta and "type_char" in meta:
-        return meta["type_char"], int(meta["bytes_per_value"])
-    key = field.dataType.simpleString()
-    if key in _SPARK_TO_TYPE:
-        return _SPARK_TO_TYPE[key]
-    raise ValueError(f"no timebox type for Spark field {field}")

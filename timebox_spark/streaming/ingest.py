@@ -460,7 +460,6 @@ def compact_corpus(
     band_bloom_k: int = 5,
     batch_index_out: dict | None = None,
     timings: dict | None = None,
-    sketch_validate: str = "eager",
 ) -> DataFrame:
     """The batch half of the ingest lambda split ``curate_stream``
     documents: given the rows a streaming window accumulated
@@ -586,14 +585,6 @@ def compact_corpus(
     index_writes ~7 s → ~2 s per cycle). The tables stay valid only
     until the owner unpersists ``exact_owned_rdds``.
 
-    ``sketch_validate`` (round 18) is forwarded to the fps gate
-    (``incremental_exact_dedup``) and the band-key gate's
-    ``bloom_probe`` calls: ``'inline'`` folds sketch sentinel
-    validation into the probe plans as per-row asserts instead of one
-    eager full-tree scan per gate per cycle — for callers that own
-    the sketch trees' write path (``run_ingest_cycle``); mismatched or
-    mixed-geometry trees still raise, at the first gate action.
-
     ``timings`` (round 17 — the observability behind the bench
     ingest_loop's compact_write attribution): pass a dict to receive
     wall seconds for the EAGER sub-steps this call runs while
@@ -652,7 +643,6 @@ def compact_corpus(
         # after fully consuming it (run_ingest_cycle does, after its
         # corpus partition commits)
         owned_rdds=exact_owned_rdds,
-        sketch_validate=sketch_validate,
     )
     _ct = _cstamp("exact_gate", _ct)
     if not near_dup:
@@ -734,36 +724,16 @@ def compact_corpus(
             FPS_PRUNE_ISIN_MAX,
             ensure_in_filter_pushdown,
         )
-        from timebox_spark.operators.sketches import (
-            BloomBroadcastBudgetError,
-            bloom_probe,
-        )
+        from timebox_spark.operators.sketches import bloom_probe
 
         bkeys = (
             b_banded.select("key").filter(F.col("key").isNotNull())
             .distinct()
         )
-        try:
-            kprobe = bloom_probe(
-                bkeys, "key", "key", corpus_band_bloom,
-                band_bloom_m, band_bloom_k,
-                validate=sketch_validate,
-            )
-        except BloomBroadcastBudgetError as e:
-            import warnings
-
-            warnings.warn(
-                f"compact_corpus: band-key pre-gate over the broadcast "
-                f"budget — probing via the shuffle strategy this cycle "
-                f"({e})",
-                UserWarning,
-                stacklevel=2,
-            )
-            kprobe = bloom_probe(
-                bkeys, "key", "key", corpus_band_bloom,
-                band_bloom_m, band_bloom_k, strategy="shuffle",
-                validate=sketch_validate,
-            )
+        kprobe = bloom_probe(
+            bkeys, "key", "key", corpus_band_bloom,
+            band_bloom_m, band_bloom_k, strategy="auto",
+        )
         maybe_keys = kprobe.filter(F.col("maybe_present")).select("key")
         krows = maybe_keys.limit(FPS_PRUNE_ISIN_MAX + 1).collect()
         if len(krows) <= FPS_PRUNE_ISIN_MAX:
@@ -1172,38 +1142,12 @@ def curate_and_ingest_stream(
     (None = the session's ``spark.sql.shuffle.partitions``, 0 =
     keep the source partitioning). Detector-only by measurement: see
     the inline note at the ``curate_stream`` call."""
-    if cap_max is not None and (
-        cms_col is None or cms_col not in stream.columns
-    ):
-        # fail at CALL time, not asynchronously inside foreachBatch on
-        # the first micro-batch (run_ingest_cycle re-checks per cycle)
-        raise ValueError(
-            "curate_and_ingest_stream: cap_max needs cms_col naming a "
-            "stream column — the budget is enforced against the "
-            "store's count-min tree of that column"
-        )
-    if cms_weight_col is not None and (
-        cms_col is None
-        or cms_col not in stream.columns
-        or cms_weight_col not in stream.columns
-    ):
-        raise ValueError(
-            "curate_and_ingest_stream: cms_weight_col needs cms_col "
-            "AND the weight column present in the stream — the "
-            "weighted tree sketches SUM(weight) per cms_col value"
-        )
-    if token_budget_max is not None and cms_weight_col is None:
-        raise ValueError(
-            "curate_and_ingest_stream: token_budget_max needs "
-            "cms_weight_col — the token budget is enforced against "
-            "the store's WEIGHTED count-min tree"
-        )
-    if cap_max is not None and cms_weight_col is not None:
-        raise ValueError(
-            "curate_and_ingest_stream: cap_max and cms_weight_col "
-            "are mutually exclusive — one cms tree holds ONE "
-            "denomination (row counts or weight sums)"
-        )
+    # fail at CALL time, not asynchronously inside foreachBatch on the
+    # first micro-batch (run_ingest_cycle re-checks per cycle)
+    _check_cms_options(
+        "curate_and_ingest_stream", stream.columns, cms_col,
+        cms_weight_col, cap_max, token_budget_max,
+    )
     carry: tuple[str, ...] = (ts_col,) if stream_near_dup else ()
     if cms_col is not None and cms_col not in (id_col, text_col) and (
         cms_col not in carry
@@ -1282,11 +1226,16 @@ def curate_and_ingest_stream(
         # batch fully removed by the hits anti-join now skips the
         # cycle instead of writing empty cycle partitions (no rows
         # change either way — state reads filter by cycle, and
-        # coverage backfill keys off the SOURCE tree's partitions).
+        # coverage backfill keys off the SOURCE tree's partitions),
+        # but still runs a consolidation due on its cycle id.
         owned: list = []
         try:
             batch = _tracked_local_checkpoint(batch, owned)
             if batch.isEmpty():
+                _consolidate_if_due(
+                    batch.sparkSession, store_path, int(batch_id),
+                    consolidate_every,
+                )
                 return
             run_ingest_cycle(
                 batch,
@@ -1778,6 +1727,63 @@ def consolidate_ingest_store(
     _invalidate_tree_schema_cache(store_path)
 
 
+def _check_cms_options(
+    caller: str,
+    columns: list[str],
+    cms_col: str | None,
+    cms_weight_col: str | None,
+    cap_max: int | None,
+    token_budget_max: int | None,
+) -> None:
+    """Raise on an invalid pairing of the cms-tree options, before
+    anything runs: ``caller`` names the entrypoint in the message and
+    ``columns`` are its input frame's."""
+    if cap_max is not None and (cms_col is None or cms_col not in columns):
+        raise ValueError(
+            f"{caller}: cap_max needs cms_col naming an input column — "
+            f"the budget is enforced against the store's count-min "
+            f"tree of that column"
+        )
+    if cms_weight_col is not None and (
+        cms_col is None or cms_col not in columns
+        or cms_weight_col not in columns
+    ):
+        raise ValueError(
+            f"{caller}: cms_weight_col needs cms_col AND the weight "
+            f"column present in the input — the weighted tree "
+            f"sketches SUM(weight) per cms_col value"
+        )
+    if token_budget_max is not None and cms_weight_col is None:
+        raise ValueError(
+            f"{caller}: token_budget_max needs cms_weight_col — the "
+            f"token budget is enforced against the store's WEIGHTED "
+            f"count-min tree"
+        )
+    if cap_max is not None and cms_weight_col is not None:
+        raise ValueError(
+            f"{caller}: cap_max and cms_weight_col are mutually "
+            f"exclusive — one cms tree holds ONE denomination (row "
+            f"counts or weight sums); run separate stores to budget both"
+        )
+
+
+def _consolidate_if_due(
+    spark: SparkSession,
+    store_path: str,
+    cycle_id: int,
+    consolidate_every: int | None,
+) -> bool:
+    """Fold every cycle below ``cycle_id`` into one partition when
+    ``cycle_id`` is a ``consolidate_every`` boundary; True if it did.
+    The ingest sink calls this for a micro-batch that runs no cycle,
+    too, so an empty batch on the boundary still consolidates."""
+    if not (consolidate_every and cycle_id > 0
+            and cycle_id % consolidate_every == 0):
+        return False
+    consolidate_ingest_store(spark, store_path, cycle_id - 1)
+    return True
+
+
 def read_store_cms(
     spark: SparkSession, store_path: str, upto_cycle: int | None = None
 ) -> DataFrame:
@@ -1934,8 +1940,8 @@ def run_ingest_cycle(
     denomination: ``cap_max`` and ``cms_weight_col`` are mutually
     exclusive, each sketch partition stamps a weightedness sentinel,
     and a cycle whose mode disagrees with the store's tree raises on
-    the FIRST mismatch (``sketches.cms_is_weighted``) instead of
-    silently poisoning the denomination.
+    the FIRST mismatch, before it writes, instead of silently
+    poisoning the denomination.
 
     ``timings`` (round 16 — the observability behind bench's
     ``ingest_loop`` block): pass a dict to receive the cycle's
@@ -1963,44 +1969,16 @@ def run_ingest_cycle(
 
     spark = new_batch.sparkSession
     paths = _store_tree_paths(store_path)
-    if cap_max is not None and (
-        cms_col is None or cms_col not in new_batch.columns
-    ):
-        raise ValueError(
-            "run_ingest_cycle: cap_max needs cms_col naming a batch "
-            "column — the budget is enforced against the store's "
-            "count-min tree of that column"
-        )
-    if cms_weight_col is not None and (
-        cms_col is None
-        or cms_col not in new_batch.columns
-        or cms_weight_col not in new_batch.columns
-    ):
-        raise ValueError(
-            "run_ingest_cycle: cms_weight_col needs cms_col AND the "
-            "weight column present in the batch — the weighted tree "
-            "sketches SUM(weight) per cms_col value"
-        )
-    if token_budget_max is not None and cms_weight_col is None:
-        raise ValueError(
-            "run_ingest_cycle: token_budget_max needs cms_weight_col "
-            "— the token budget is enforced against the store's "
-            "WEIGHTED count-min tree"
-        )
-    if cap_max is not None and cms_weight_col is not None:
-        raise ValueError(
-            "run_ingest_cycle: cap_max and cms_weight_col are "
-            "mutually exclusive — one cms tree holds ONE "
-            "denomination (row counts or weight sums); run separate "
-            "stores to budget both"
-        )
+    _check_cms_options(
+        "run_ingest_cycle", new_batch.columns, cms_col, cms_weight_col,
+        cap_max, token_budget_max,
+    )
     _t = _time.perf_counter()
     if cycle_id == 0:
         # a cycle-0 seed is a fresh (or recreated-at-the-same-path)
         # store — any cached tree schemas describe a previous store
         _invalidate_tree_schema_cache(store_path)
-    if consolidate_every and cycle_id > 0 and cycle_id % consolidate_every == 0:
-        consolidate_ingest_store(spark, store_path, cycle_id - 1)
+    if _consolidate_if_due(spark, store_path, cycle_id, consolidate_every):
         _t = _stamp("consolidate", _t)
 
     def read_prior(key: str) -> DataFrame | None:
@@ -2049,13 +2027,12 @@ def run_ingest_cycle(
             lambda df: bloom_build(_fps_as_hex(df), "__fp", bloom_m, bloom_k),
         )
         # the RAW tree goes straight to the probe (round 17):
-        # bloom_probe's _bloom_stats validates the sentinels
-        # PRE-aggregation (conflicting (m_bits, k) raise — strictly
-        # stronger than checking the merged frame, where bit_or can
-        # alias k=5|7 into a valid-looking 7) and defensively
-        # re-aggregates per word, so bloom_merge's separate eager
-        # conflict job (a full-tree scan per cycle) bought nothing
-        # the probe doesn't already guarantee
+        # bloom_probe asserts the sentinels per row PRE-aggregation
+        # (conflicting (m_bits, k) raise — strictly stronger than
+        # checking the merged frame, where bit_or can alias k=5|7
+        # into a valid-looking 7) and defensively re-aggregates per
+        # word, so a separate bloom_merge buys nothing the probe
+        # doesn't already guarantee
         prior_bloom = read_prior("bloom")
         if prior_bloom is not None:
             bloom = prior_bloom
@@ -2105,7 +2082,7 @@ def run_ingest_cycle(
         # back-to-back full-tree scans).
         prior_cms = read_prior("cms")
         if prior_cms is not None:
-            _, tree_weighted = _cms_stats_mode(
+            tree_weighted = _cms_stats_mode(
                 prior_cms, cms_width, cms_depth,
                 "run_ingest_cycle(cms_col=...)",
             )
@@ -2259,12 +2236,6 @@ def run_ingest_cycle(
             timings=(
                 None if timings is None else _compact_sub
             ),
-            # the gates probe trees THIS function's own cycles and
-            # backfills wrote with exactly these (m, k) — validation
-            # rides the probe plans per-row (round 18) instead of two
-            # eager full-tree scans per cycle; a foreign/mixed tree
-            # still raises, at the first gate action
-            sketch_validate="inline",
         )
         if cap_max is not None:
             # corpus-horizon frequency budget on the KEPT rows: the
